@@ -93,33 +93,20 @@ object Bench {
     GraftSession.quietBoundedWindowWarn()
     // Suite-interference instrumentation (VERDICT r11 item 5: 8 gates
     // flagged >1.5x in-suite, 0 reproduced isolated or cold — adjudged
-    // statistically, with no named mechanism). A task-metrics listener
+    // statistically, with no named mechanism). The metrics collector
     // accumulates the residue candidates per gate: executor GC time,
     // shuffle bytes written/read, memory+disk spill, plus the
     // persistent-RDD count after the gate (localCheckpoint(true) blocks
     // linger until the ContextCleaner runs — block-manager pressure is
     // the leading suspect). bench_detail.json carries the per-gate
     // deltas so a flag adjudication can point at a cause, not a p-value.
-    val mGc = new java.util.concurrent.atomic.AtomicLong
-    val mSw = new java.util.concurrent.atomic.AtomicLong
-    val mSr = new java.util.concurrent.atomic.AtomicLong
-    val mSp = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val tm = e.taskMetrics
-          if (tm != null) {
-            mGc.addAndGet(tm.jvmGCTime)
-            mSw.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-            mSr.addAndGet(tm.shuffleReadMetrics.localBytesRead +
-              tm.shuffleReadMetrics.remoteBytesRead)
-            mSp.addAndGet(tm.memoryBytesSpilled + tm.diskBytesSpilled)
-          }
-        }
-      })
-    def residueSnapshot(): (Long, Long, Long, Long) =
-      (mGc.get(), mSw.get(), mSr.get(), mSp.get())
+    // overall() drains the listener bus first, so a gate's late task
+    // events never land in the next gate's numbers.
+    val metrics = graft.tools.RunMetrics.of(spark.sparkContext)
+    def residueSnapshot(): (Long, Long, Long, Long) = {
+      val m = metrics.overall()
+      (m.gcMs, m.shuffleWriteBytes, m.shuffleReadBytes, m.spillBytes)
+    }
     // warmup: JIT + codegen + parquet footer caches, so the first timed
     // query doesn't absorb session start-up
     try {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.tools.Study
 
 /** Scale-stress driver for the dedup pipeline: replicates the sf
   * documents corpus `k`× with a per-replica token suffix, so replica
@@ -15,16 +16,15 @@ import graft.operators.Dedup
   * Runs MinHash-LSH near-dups at the production tuning and connected
   * components over the found pairs, timing each stage.
   *
-  * Usage: runMain graft.Stress <sfDir> <replicas> [cpus]
+  * Usage: runMain graft.Stress <sfDir> <replicas>
   * Prints one summary line per stage; results recorded in SCALE.md.
   */
 object Stress {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val k = args(1).toInt
-    val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = GraftSession.builder("graft-stress", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("stress")
+    val spark = study.spark
 
     val base = Tables.load(spark, sfDir, "documents")
       .filter(col("doc_id") % 5 === 0)
@@ -36,17 +36,11 @@ object Stress {
         concat_ws(" ",
           transform(split(col("text"), "\\s+"),
             t => concat(t, lit("_r"), col("rep")))).as("text"))
-      .repartition(cpus * 2)
+      .repartition(study.cores * 2)
       .localCheckpoint(true)
     val nDocs = corpus.count()
 
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[stress] $label%-28s ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
-
+    import study.timed
     println(s"[stress] corpus: $nDocs docs ($k replicas)")
     val pairs = timed("minhash_lsh_neardups") {
       Dedup.minHashNearDups(corpus, "doc_id", "text",
@@ -102,6 +96,6 @@ object Stress {
         .localCheckpoint(true)
     }
     println(s"[stress] novel probe pairs: ${novelPairs.count()}")
-    spark.stop()
+    study.stop()
   }
 }

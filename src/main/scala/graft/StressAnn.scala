@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.tools.Study
 
 /** Scale-stress driver for the ANN family: replicates the sf embeddings
   * corpus `k`× under per-replica Rademacher sign flips — elementwise
@@ -16,19 +17,21 @@ import graft.operators.Similarity
   * Measures, per scale: exact brute-force top-10 over a bounded query
   * set (the ground truth — linear in k·|corpus|·|queries|), IVF
   * build+search time with cells scaled as ~sqrt(n), and recall@10 of
-  * IVF vs exact.
+  * IVF vs exact. At local corpus sizes (~130 MB of postings) the scan
+  * is job-overhead-bound, so the input bytes each stage prints, not
+  * its seconds, are the honest measure of what cell pruning saves.
   *
-  * Usage: runMain graft.StressAnn <sfDir> <replicas> [cpus] [nQueries]
+  * Usage: runMain graft.StressAnn <sfDir> <replicas> [nQueries]
   * Prints one summary line per stage; results recorded in SCALE.md.
   */
 object StressAnn {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val k = args(1).toInt
-    val cpus = if (args.length > 2) args(2).toInt else 16
-    val nQueries = if (args.length > 3) args(3).toInt else 100
-    val spark = GraftSession.builder("graft-stress-ann", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val nQueries = if (args.length > 2) args(2).toInt else 100
+    val study = Study("stress-ann")
+    val spark = study.spark
+    import study.timed
 
     val base = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -39,7 +42,7 @@ object StressAnn {
         transform(col("embedding"),
           (x, i) => when(pmod(hash(col("rep"), i), lit(2)) === 0, x)
             .otherwise(-x)).as("embedding"))
-      .repartition(cpus * 2)
+      .repartition(study.cores * 2)
       .localCheckpoint(true)
     val n = corpus.count()
     println(s"[stress-ann] corpus: $n vectors ($k replicas)")
@@ -51,27 +54,6 @@ object StressAnn {
       .orderBy(col("vec_id")).limit(nQueries)
       .localCheckpoint(true)
     println(s"[stress-ann] queries: ${queries.count()}")
-
-    // input-bytes accounting: at local corpus sizes (~130 MB of
-    // postings) the scan is job-overhead-bound, so BYTES READ, not
-    // seconds, is the honest measure of what cell pruning saves
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      })
-
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      bytesRead.set(0L)
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200) // drain trailing task-end events
-      println(f"[stress-ann] $label%-34s $secs%5.1f s  read=${bytesRead.get / 1e6}%8.1f MB")
-      r
-    }
 
     val exact = timed("brute_force_top10") {
       Similarity.bruteForceTopK(corpus, queries, 10).localCheckpoint(true)
@@ -140,6 +122,6 @@ object StressAnn {
       Similarity.ivfSearch(h.postings, fewQueries, 10, h.centroids, smallProbe)
         .localCheckpoint(true)
     }
-    spark.stop()
+    study.stop()
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, Similarity, TableStore}
+import graft.operators.{AnnIndex, TableStore}
+import graft.tools.Study
 
 /** Incremental-ANN cost study (VERDICT r11 item 3's second half): a
   * daily embedding batch lands in a persisted IVF index via
@@ -19,34 +20,18 @@ import graft.operators.{AnnIndex, Similarity, TableStore}
   * a decade per corpus decade. The run prints both times and bytes
   * read per decade; SCALE.md records the measured exponents.
   *
-  * Usage: runMain graft.StressAnnAppend <sfDir> [cpus] [batchSize]
+  * Usage: runMain graft.StressAnnAppend <sfDir> [batchSize]
   */
 object StressAnnAppend {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = if (args.length > 1) args(1).toInt else 16
-    val batchSize = if (args.length > 2) args(2).toInt else 50
-    val spark = GraftSession.builder("graft-stress-annappend", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val batchSize = if (args.length > 1) args(1).toInt else 50
+    val study = Study("stress-annappend")
+    val spark = study.spark
+    import study.timed
 
     val base = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      })
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      bytesRead.set(0L)
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      println(f"[stress-annappend] $label%-38s $secs%6.2f s  read=${bytesRead.get / 1e6}%8.1f MB")
-      r
-    }
 
     for (k <- Seq(1, 4, 16)) {
       // k sign-flip replicas (the StressAnn construction: distinct
@@ -59,7 +44,7 @@ object StressAnnAppend {
           transform(col("embedding"),
             (x, i) => when(pmod(hash(col("rep"), i), lit(2)) === 0, x)
               .otherwise(-x)).as("embedding"))
-        .repartition(cpus * 2)
+        .repartition(study.cores * 2)
         .localCheckpoint(true)
       val n = corpus.count()
       val batch = base.limit(batchSize)
@@ -89,6 +74,6 @@ object StressAnnAppend {
           .localCheckpoint(true)
       }
     }
-    spark.stop()
+    study.stop()
   }
 }

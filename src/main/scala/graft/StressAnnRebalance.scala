@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AnnIndex, TableStore}
+import graft.tools.Study
 
 /** IVF cell-rebalance cost study (VERDICT r12 item 6's second half):
   * [[AnnIndex.rebalance]] claims O(split-cell rows × centroids), never
@@ -18,33 +19,17 @@ import graft.operators.{AnnIndex, TableStore}
   * honest separator (the study prints both), and it should widen a
   * decade per corpus decade at fixed s.
   *
-  * Usage: runMain graft.StressAnnRebalance <sfDir> [cpus]
+  * Usage: runMain graft.StressAnnRebalance <sfDir>
   */
 object StressAnnRebalance {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = if (args.length > 1) args(1).toInt else 16
-    val spark = GraftSession.builder("graft-stress-annreb", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("stress-annreb")
+    val spark = study.spark
+    import study.timed
 
     val base = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      })
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      bytesRead.set(0L)
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      println(f"[stress-annreb] $label%-40s $secs%6.2f s  read=${bytesRead.get / 1e6}%8.1f MB")
-      r
-    }
 
     for (k <- Seq(1, 4, 16)) {
       // the StressAnn sign-flip replica construction: k distinct
@@ -56,7 +41,7 @@ object StressAnnRebalance {
           transform(col("embedding"),
             (x, i) => when(pmod(hash(col("rep"), i), lit(2)) === 0, x)
               .otherwise(-x)).as("embedding"))
-        .repartition(cpus * 2)
+        .repartition(study.cores * 2)
         .localCheckpoint(true)
       val n = corpus.count()
       val cells = math.max(16, math.sqrt(n.toDouble).toInt)
@@ -85,6 +70,6 @@ object StressAnnRebalance {
           .localCheckpoint(true)
       }
     }
-    spark.stop()
+    study.stop()
   }
 }

@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.TableStore
+import graft.tools.Study
 
 /** Measures the point of `TableStore.append`: adding a small batch to a
   * large table must cost O(new data), not O(table). Builds an N-row
@@ -12,7 +11,7 @@ import graft.operators.TableStore
   * (stage small files + hardlink the rest + one directory swap) against
   * the rewrite path (`overwrite(existing ∪ batch)`), at growing N.
   *
-  * Usage: runMain graft.StressAppend [rows] [batch] [cpus]
+  * Usage: runMain graft.StressAppend [rows] [batch]
   * Results recorded in SCALE.md.
   */
 object StressAppend {
@@ -20,13 +19,9 @@ object StressAppend {
   def main(args: Array[String]): Unit = {
     val rows = if (args.length > 0) args(0).toLong else 20000000L
     val batch = if (args.length > 1) args(1).toLong else 10000L
-    val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = GraftSession.builder("graft-stress-append", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def time[T](body: => T): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
+    val study = Study("append")
+    val spark = study.spark
+    def time[T](body: => T): Double = study.measure(body).seconds
     def payload(n: Long, offset: Long = 0L) = spark.range(n).select(
       (col("id") + offset).as("id"),
       (col("id") % 1000).cast("string").as("k"),
@@ -43,6 +38,6 @@ object StressAppend {
       println(f"[append] rows=$n%,d batch=$batch%,d  append=${tAppend}%6.2f s" +
         f"  rewrite=${tRewrite}%7.2f s  (${tRewrite / tAppend}%4.1fx)  final=$count%,d")
     }
-    spark.stop()
+    study.stop()
   }
 }

@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.TableStore
+import graft.tools.Study
 
 /** Small-files stress: the classic lakehouse failure mode measured.
   * The ×100 events table (60M rows) is written three ways — shattered
@@ -18,17 +17,16 @@ import graft.operators.TableStore
   * close the gap. At 100 TB the shattered layout is not 2× slower, it
   * is a cluster outage — listing and opening 10^7 files dominates I/O.
   *
-  * Usage: runMain graft.StressCompact [replicas] [cpus]
+  * Usage: runMain graft.StressCompact [replicas]
   * Results recorded in SCALE.md.
   */
 object StressCompact {
   def main(args: Array[String]): Unit = {
     val k = if (args.length > 0) args(0).toInt else 100
-    val cpus = if (args.length > 1) args(1).toInt else 16
     val shatterFiles = 4000
-
-    val spark = GraftSession.builder("graft-stress-compact", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("compact")
+    val spark = study.spark
+    val cpus = study.cores
 
     val reps = spark.range(k).select(col("id").as("rep"))
     val events = Tables.load(spark, "/root/testdata/sf0.1", "events")
@@ -43,11 +41,8 @@ object StressCompact {
       graft.queries.GateScratch.dir("graft-compact-").toString)
 
     def timeScan(label: String): Unit = {
-      def t(what: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[compact] $label%-22s $what%-16s ${(System.nanoTime() - t0) / 1e9}%6.2f s   rows=$r")
-      }
+      def t(what: String)(f: => Long): Unit =
+        println(s"[compact] rows=${study.timed(s"$label $what")(f)}")
       t("selective_scan") {
         store.read("ev")
           .filter(col("user_id").between(100, 120) && col("value") > 50)
@@ -62,23 +57,21 @@ object StressCompact {
     }
 
     // 1. shattered: thousands of tiny files (per-batch append pattern)
-    val w0 = System.nanoTime()
-    store.overwrite("ev", events.repartition(shatterFiles))
-    println(f"[compact] write shattered ($shatterFiles files): ${(System.nanoTime() - w0) / 1e9}%.1f s")
+    study.timed(s"write shattered ($shatterFiles files)") {
+      store.overwrite("ev", events.repartition(shatterFiles))
+    }
     timeScan(s"shattered_$shatterFiles")
 
     // 2. OPTIMIZE to one file per core
-    val c0 = System.nanoTime()
-    store.compact("ev", cpus)
-    println(f"[compact] OPTIMIZE -> $cpus files: ${(System.nanoTime() - c0) / 1e9}%.1f s")
+    study.timed(s"OPTIMIZE -> $cpus files")(store.compact("ev", cpus))
     timeScan(s"compacted_$cpus")
 
     // 3. compact + z-order on the selective-scan dimensions
-    val z0 = System.nanoTime()
-    store.compactClustered("ev", Seq("user_id", "value"), cpus)
-    println(f"[compact] z-order(user_id,value) -> $cpus files: ${(System.nanoTime() - z0) / 1e9}%.1f s")
+    study.timed(s"z-order(user_id,value) -> $cpus files") {
+      store.compactClustered("ev", Seq("user_id", "value"), cpus)
+    }
     timeScan("zordered")
 
-    spark.stop()
+    study.stop()
   }
 }

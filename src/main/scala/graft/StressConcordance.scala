@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Concordance
+import graft.tools.Study
 
 /** Scale study for the bucket-grid concordance decomposition (VERDICT
   * r9 item 8): wall time at 1×/10×/100× the sf-cohort under the
@@ -16,23 +17,19 @@ import graft.operators.Concordance
   * IDENTICAL (any in-bucket/algebra miscount would move between
   * classes when boundaries move).
   *
-  * Usage: runMain graft.StressConcordance <sfDir> <k> [cpus]
+  * Usage: runMain graft.StressConcordance <sfDir> <k>
   */
 object StressConcordance {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val k = args(1).toInt
-    val cpus = if (args.length > 2) args(2).toInt else 32
-    val spark = GraftSession.builder("graft-stress-concordance", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBoundedWindowWarn()
+    val study = Study("concscale")
+    val spark = study.spark
 
     def timed[T](what: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[concscale] k=$k $what: $s%.2f s")
-      (r, s)
+      val m = study.measure(f)
+      println(f"[concscale] k=$k $what: ${m.seconds}%.2f s  ${m.metrics.summary}")
+      (m.value, m.seconds)
     }
 
     // the a93_cindex_scalable cohort shape, replicated ×k with a tiny
@@ -53,7 +50,7 @@ object StressConcordance {
     val cohort = base.crossJoin(broadcast(reps))
       .select(col("dur"), col("ev"),
         (col("score") + col("rep") * 1e-5).as("score"), col("okey"), col("rep"))
-      .repartition(cpus * 2)
+      .repartition(study.cores * 2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = cohort.count()
     val b = math.max(64, math.sqrt(n.toDouble).toInt)
@@ -91,6 +88,6 @@ object StressConcordance {
 
     println(f"[concscale] RESULT k=$k rows=$n B=$b " +
       f"uniform=$tUniform%.2f skewed=$tSkew%.2f")
-    spark.stop()
+    study.stop()
   }
 }

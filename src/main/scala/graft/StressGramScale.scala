@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.tools.Study
 
 /** Scale study for the PCA scan-count fix (round 9): the multi-pass
   * deflated walk ([[Similarity.topPrincipalComponentsMultiPass]],
@@ -17,22 +18,19 @@ import graft.operators.Similarity
   * the one-pass path grows ~linearly in k ONCE and its driver walk is
   * k-independent.
   *
-  * Usage: runMain graft.StressGramScale <sfDir> <k> [cpus]
+  * Usage: runMain graft.StressGramScale <sfDir> <k>
   */
 object StressGramScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val k = args(1).toInt
-    val cpus = if (args.length > 2) args(2).toInt else 32
-    val spark = GraftSession.builder("graft-stress-gramscale", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("gramscale")
+    val spark = study.spark
 
     def timed[T](what: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[gramscale] k=$k $what: $s%.2f s")
-      (r, s)
+      val m = study.measure(f)
+      println(f"[gramscale] k=$k $what: ${m.seconds}%.2f s  ${m.metrics.summary}")
+      (m.value, m.seconds)
     }
 
     // replicate rows with a tiny replica-dependent perturbation on ONE
@@ -47,7 +45,7 @@ object StressGramScale {
       .select(transform(col("embedding"),
         (x, i) => x + when(i === 0, col("rep") * 1e-7).otherwise(0.0))
         .as("embedding"))
-      .repartition(cpus * 2)
+      .repartition(study.cores * 2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = corpus.count()
     println(s"[gramscale] k=$k rows=$n")
@@ -89,6 +87,6 @@ object StressGramScale {
     println(f"[gramscale] k=$k RESULT walk=$tWalk%.2f s gram=$tGram%.2f s " +
       f"block=$tBlock%.2f s speedup=${tWalk / tGram}%.1fx")
     corpus.unpersist()
-    spark.stop()
+    study.stop()
   }
 }

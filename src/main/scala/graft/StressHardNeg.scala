@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.tools.Study
 
 /** Scale study for the shortlist path of
   * [[operators.Similarity.hardNegatives]] (VERDICT r10 item 4): recall
@@ -30,7 +31,7 @@ import graft.operators.Similarity
   * Deterministic: vectors and labels derive from splitmix64 of the row
   * id — no RNG state, same corpus every run.
   *
-  * Usage: runMain graft.StressHardNeg <n> [cpus]
+  * Usage: runMain graft.StressHardNeg <n>
   */
 object StressHardNeg {
 
@@ -51,9 +52,8 @@ object StressHardNeg {
 
   def main(args: Array[String]): Unit = {
     val n = args(0).toLong
-    val cpus = if (args.length > 1) args(1).toInt else 32
-    val spark = GraftSession.builder("graft-stress-hardneg", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("hardneg")
+    val spark = study.spark
     import spark.implicits._
 
     val corpus = spark.range(n).mapPartitions(_.map { id =>
@@ -72,7 +72,7 @@ object StressHardNeg {
       val label = if (p < M - 2) (g % 10).toInt else ((g + 1) % 10).toInt
       (id, vec, label)
     }).toDF("vec_id", "embedding", "label")
-      .repartition(cpus * 2)
+      .repartition(study.cores * 2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     corpus.count()
 
@@ -84,9 +84,8 @@ object StressHardNeg {
     println(s"[hardneg] n=$n queries=$nq clusterWidth=$M k=$K")
 
     def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
+      val m = study.measure(f)
+      (m.value, m.seconds)
     }
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select(col("query_id"), col("corpus_id")).collect()
@@ -131,6 +130,6 @@ object StressHardNeg {
     val aRecall = (aPairs & exactPairs).size.toDouble / exactPairs.size
     println(f"[hardneg] n=$n ADAPTIVE(s0=$K) recall=$aRecall%.3f " +
       f"starved_queries=$aStarved/$nq time=${tAdaptive}%.2f s")
-    spark.stop()
+    study.stop()
   }
 }

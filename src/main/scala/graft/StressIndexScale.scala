@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AnnIndex, LshTextIndex, PqIndex, TableStore}
+import graft.tools.Study
 
 /** Scale study for the PERSISTED INDEX family (VERDICT r7 item 4):
   * PqIndex / AnnIndex / LshTextIndex build + probe at 1×, 10×, 100× of
@@ -22,25 +23,19 @@ import graft.operators.{AnnIndex, LshTextIndex, PqIndex, TableStore}
   * join-form path with no driver collect) against the base corpus: the
   * offline batch-scoring shape the 4096-ceiling removal exists for.
   *
-  * Usage: runMain graft.StressIndexScale <sfDir> <k> [cpus] [bulkQueries]
+  * Usage: runMain graft.StressIndexScale <sfDir> <k> [bulkQueries]
   */
 object StressIndexScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val k = args(1).toInt
-    val cpus = if (args.length > 2) args(2).toInt else 32
-    val bulkQueries = if (args.length > 3) args(3).toInt else 0
-    val spark = GraftSession.builder("graft-stress-indexscale", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val bulkQueries = if (args.length > 2) args(2).toInt else 0
+    val study = Study("idxscale")
+    val spark = study.spark
     val store = new TableStore(spark,
       graft.queries.GateScratch.dir("graft-idxscale-").toString)
 
-    def timed[T](what: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[idxscale] k=$k $what: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+    def timed[T](what: String)(f: => T): T = study.timed(s"k=$k $what")(f)
     def dirBytes(table: String): Long = {
       def walk(f: java.io.File): Long =
         if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
@@ -59,7 +54,7 @@ object StressIndexScale {
         transform(col("embedding"),
           (x, i) => when(pmod(hash(col("rep"), i), lit(2)) === 0, x)
             .otherwise(-x)).as("embedding"))
-      .repartition(cpus * 2)
+      .repartition(study.cores * 2)
       .localCheckpoint(true)
     val nVec = corpus.count()
     val rawVecBytes = nVec * 64L * 4 // float32 payload for the size ratio
@@ -73,7 +68,7 @@ object StressIndexScale {
         when(col("rep") === 0, col("text")).otherwise(
           array_join(transform(split(col("text"), " "),
             t => concat(t, lit("_r"), col("rep"))), " ")).as("text"))
-      .repartition(cpus * 2)
+      .repartition(study.cores * 2)
       .localCheckpoint(true)
     val nDocs = docs.count()
     println(s"[idxscale] k=$k documents: $nDocs docs")
@@ -132,6 +127,6 @@ object StressIndexScale {
       LshTextIndex.probe(hLsh, newDocs, threshold = 0.9).count()
     }
 
-    spark.stop()
+    study.stop()
   }
 }

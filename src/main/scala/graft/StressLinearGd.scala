@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.QualityModel
+import graft.tools.Study
 
 /** Scale study for the trained quality filter ([[operators.QualityModel]]
   * round 10): per-epoch gradient-pass cost across a replicated documents
@@ -16,22 +17,19 @@ import graft.operators.QualityModel
   * replica perturbs the label threshold's input by a replica-dependent
   * epsilon so replicas are not byte-identical rows.
   *
-  * Usage: runMain graft.StressLinearGd <sfDir> <k> [cpus]
+  * Usage: runMain graft.StressLinearGd <sfDir> <k>
   */
 object StressLinearGd {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val k = args(1).toInt
-    val cpus = if (args.length > 2) args(2).toInt else 32
-    val spark = GraftSession.builder("graft-stress-lineargd", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("lineargd")
+    val spark = study.spark
 
     def timed[T](what: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[lineargd] k=$k $what: $s%.2f s")
-      (r, s)
+      val m = study.measure(f)
+      println(f"[lineargd] k=$k $what: ${m.seconds}%.2f s  ${m.metrics.summary}")
+      (m.value, m.seconds)
     }
 
     val base = Tables.load(spark, sfDir, "documents")
@@ -47,7 +45,7 @@ object StressLinearGd {
             .cast("double")).as("features"),
         when(col("n_chars") + col("rep") % 7 > 300, 1.0).otherwise(0.0)
           .as("y"))
-      .repartition(cpus * 2)
+      .repartition(study.cores * 2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = corpus.count()
     println(s"[lineargd] k=$k rows=$n")
@@ -67,6 +65,6 @@ object StressLinearGd {
     println(f"[lineargd] k=$k kept=$kept (${100.0 * kept / n}%.1f%%) " +
       f"train=$tTrain%.2f s score=$tScore%.2f s")
     corpus.unpersist(false)
-    spark.stop()
+    study.stop()
   }
 }

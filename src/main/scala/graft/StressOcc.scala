@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.functions._
 
 import graft.operators.{OptimisticWriter, TableStore}
+import graft.tools.Study
 
 /** Scale-stress driver for the optimistic multi-writer layer: N writer
   * threads each compute and commit a partition-scoped replace of their
@@ -40,9 +40,8 @@ object StressOcc {
   def main(args: Array[String]): Unit = {
     val writers = if (args.length > 0) args(0).toInt else 8
     val rowsPer = if (args.length > 1) args(1).toLong else 2000000L
-    val spark = GraftSession.local("graft-stress-occ")
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+    val study = Study("stress-occ")
+    val spark = study.spark
 
     def freshTable(root: String): TableStore = {
       // the serialized scenario intentionally queues all writers on one
@@ -100,6 +99,6 @@ object StressOcc {
     println(f"optimistic  writers=$writers rows/part=$rowsPer  ${optSec}%.1f s  " +
       f"(speedup ${serialSec / optSec}%.1fx; lock held ${commitNanos.get / writers / 1e6}%.0f ms " +
       f"mean / ${maxCommit.get / 1e6}%.0f ms max per commit)")
-    spark.stop()
+    study.stop()
   }
 }

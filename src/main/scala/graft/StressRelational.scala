@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.queries.Registry
+import graft.tools.Study
 
 /** Scale-up stress for the relational core: replicates the fact tables
   * (lineitem, orders) k× with per-replica ORDERKEY offsets — so order↔
@@ -21,7 +22,7 @@ import graft.queries.Registry
   * collapsed partition. Because the queries come straight from the
   * Registry, this measures the exact code the correctness gate pins.
   *
-  * Usage: runMain graft.StressRelational [k] [cpus]
+  * Usage: runMain graft.StressRelational [k]
   * Results recorded in SCALE.md.
   */
 object StressRelational {
@@ -33,28 +34,27 @@ object StressRelational {
 
   def main(args: Array[String]): Unit = {
     val k = if (args.length > 0) args(0).toInt else 100
-    val cpus = if (args.length > 1) args(1).toInt else 16
     val baseDir = "/root/testdata/sf0.1"
     val scaledDir = s"/tmp/graft_scaled_x$k"
 
-    val spark = GraftSession.builder("graft-stress-relational", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("scale")
+    val spark = study.spark
+    val cpus = study.cores
 
     // ---- build the scaled symlink farm (idempotent) -------------------
     if (!Files.exists(Paths.get(s"$scaledDir/.done"))) {
       Files.createDirectories(Paths.get(scaledDir))
       val reps = spark.range(k).select(col("id").as("rep"))
       val keyStride = 1000000000L
-      def scaleFacts(table: String, keyCol: String): Unit = {
-        val t0 = System.nanoTime()
-        Tables.load(spark, baseDir, table)
-          .crossJoin(reps)
-          .withColumn(keyCol, col(keyCol) + col("rep") * keyStride)
-          .drop("rep")
-          .repartition(cpus * 4)
-          .write.mode("overwrite").parquet(s"$scaledDir/$table.parquet")
-        println(f"[scale] built $table x$k in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      }
+      def scaleFacts(table: String, keyCol: String): Unit =
+        study.timed(s"built $table x$k") {
+          Tables.load(spark, baseDir, table)
+            .crossJoin(reps)
+            .withColumn(keyCol, col(keyCol) + col("rep") * keyStride)
+            .drop("rep")
+            .repartition(cpus * 4)
+            .write.mode("overwrite").parquet(s"$scaledDir/$table.parquet")
+        }
       scaleFacts("lineitem", "l_orderkey")
       scaleFacts("orders", "o_orderkey")
       for (t <- Seq("customer", "supplier", "part", "nation", "region",
@@ -72,15 +72,11 @@ object StressRelational {
       s"dims unchanged, local[$cpus]")
     println(f"[scale] ${"query"}%-20s ${"base_s"}%8s ${"scaled_s"}%9s ${"ratio"}%7s  (linear = $k)")
     for (name <- queries; q <- byName.get(name)) {
-      def time(dir: String): Double = {
-        val t0 = System.nanoTime()
-        q.build(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def time(dir: String): Double = study.measure(q.build(spark, dir).count()).seconds
       val base = time(baseDir)
       val scaled = time(scaledDir)
       println(f"[scale] $name%-20s $base%8.2f $scaled%9.1f ${scaled / base}%7.1f")
     }
-    spark.stop()
+    study.stop()
   }
 }

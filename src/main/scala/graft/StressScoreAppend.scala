@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{QualityModel, TableStore}
+import graft.tools.Study
 
 /** Scale study for [[operators.QualityModel.scoreIncremental]] (VERDICT
   * r10 item 6): per-batch cost of maintaining a scored corpus under
@@ -21,7 +22,7 @@ import graft.operators.{QualityModel, TableStore}
   *     an insert-only merge, reported here so nobody mistakes it for
   *     the flat path.
   *
-  * Usage: runMain graft.StressScoreAppend <stateRows> [cpus]
+  * Usage: runMain graft.StressScoreAppend <stateRows>
   */
 object StressScoreAppend {
   private val Dim = 4
@@ -30,10 +31,8 @@ object StressScoreAppend {
 
   def main(args: Array[String]): Unit = {
     val n = args(0).toLong
-    val cpus = if (args.length > 1) args(1).toInt else 32
-    val spark = GraftSession.builder("graft-stress-scoreappend", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("scoreappend")
+    val spark = study.spark
 
     val w = Array(0.5, 1.5, -0.25, 2.0)
     def docs(from: Long, count: Long, partOf: org.apache.spark.sql.Column) =
@@ -45,9 +44,7 @@ object StressScoreAppend {
 
     val root = java.nio.file.Files.createTempDirectory("graft-scoreappend-")
     val store = new TableStore(spark, root.toString)
-    def timed[T](f: => T): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+    def timed[T](f: => T): Double = study.measure(f).seconds
 
     // state: n rows over PartsInState partitions p0..p63
     val tState = timed {
@@ -71,6 +68,6 @@ object StressScoreAppend {
     val total = store.read("scored").count()
     println(f"[scoreappend] state=$n batch=$BatchRows " +
       f"new_partition=$tNew%.2f s same_partition=$tSame%.2f s rows=$total")
-    spark.stop()
+    study.stop()
   }
 }

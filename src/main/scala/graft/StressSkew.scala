@@ -1,12 +1,10 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Skew
+import graft.tools.Study
 
 /** Scale-stress driver for skewed shuffle joins: one hot key owning a
   * configurable fraction of a generated fact table, joined against a
@@ -32,37 +30,20 @@ import graft.operators.Skew
   * regime × 1000-executor scale); at production scale the defaults
   * trigger on the same shape without tuning.
   *
-  * Usage: runMain graft.StressSkew [rows] [hotPct] [cpus]
+  * Usage: runMain graft.StressSkew [rows] [hotPct]
   * Prints one line per variant; results recorded in SCALE.md.
   */
 object StressSkew {
 
-  /** Collects task durations so a run can report max vs p50 — the
-    * direct evidence of whether one straggler task carried the stage.
-    */
-  private final class TaskClock extends SparkListener {
-    val durations = new ArrayBuffer[Long]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      durations.synchronized { durations += t.taskInfo.duration }
-    def reset(): Unit = durations.synchronized { durations.clear() }
-    def stats(): (Double, Double, Int) = durations.synchronized {
-      if (durations.isEmpty) (0.0, 0.0, 0)
-      else {
-        val d = durations.toArray.sorted
-        (d(d.length / 2) / 1e3, d.last / 1e3, d.length)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val rows = if (args.length > 0) args(0).toLong else 50000000L
     val hotPct = if (args.length > 1) args(1).toInt else 30
-    val cpus = if (args.length > 2) args(2).toInt else 16
     val nKeys = 2000000L
     val hotKey = 42L
 
-    val spark = GraftSession.builder("graft-stress-skew", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("skew")
+    val spark = study.spark
+    val cpus = study.cores
     // no broadcast escape hatch: the dim must shuffle so the join can skew
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -70,9 +51,6 @@ object StressSkew {
     // scale partitions); factor stays at the 5x-median default
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-
-    val clock = new TaskClock
-    spark.sparkContext.addSparkListener(clock)
 
     // fact: hotPct% of rows on ONE key, the rest uniform over nKeys.
     // Deterministic (id-derived) so every variant joins identical data.
@@ -87,17 +65,17 @@ object StressSkew {
       concat(lit("payload_"), lpad(col("id").cast("string"), 80, "x")).as("tag"),
       (col("id") % 97L).cast("double").as("w"))
 
+    // max task vs p50 task is the direct evidence of whether one
+    // straggler task carried the stage
     def run(label: String)(job: => DataFrame): Unit = {
-      clock.reset()
-      val t0 = System.nanoTime()
-      val res = job.agg(
+      val m = study.measure(job.agg(
           count(lit(1)).as("n"),
           sum((col("v") * col("w")).cast("decimal(28,2)")).as("chk"))
-        .collect()(0)
-      val secs = (System.nanoTime() - t0) / 1e9
-      val (p50, max, n) = clock.stats()
-      println(f"[skew] $label%-16s ${secs}%7.1f s   rows=${res.getLong(0)}" +
-        f"   chk=${res.getDecimal(1)}   tasks=$n%4d  task_p50=${p50}%6.1f s  task_max=${max}%6.1f s")
+        .collect()(0))
+      val (res, t) = (m.value, m.metrics)
+      println(f"[skew] $label%-16s ${m.seconds}%7.1f s   rows=${res.getLong(0)}" +
+        f"   chk=${res.getDecimal(1)}   tasks=${t.tasks}%4d" +
+        f"  task_p50=${t.p50TaskMs / 1e3}%6.1f s  task_max=${t.maxTaskMs / 1e3}%6.1f s")
     }
 
     println(s"[skew] fact=$rows rows ($hotPct% on one key), dim=$nKeys rows, " +
@@ -114,10 +92,10 @@ object StressSkew {
     // hot/cold split: detection is a seeded sample (bounded driver
     // traffic), hot rows broadcast-join the hot dim slice
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    val t0 = System.nanoTime()
-    val hotKeys = Skew.detectHotKeys(fact, "key", sampleFraction = 0.0001)
-    println(f"[skew] detect_hot_keys  ${(System.nanoTime() - t0) / 1e9}%7.1f s" +
-      s"   found=${hotKeys.sortBy(_.toString).mkString(",")}")
+    val hotKeys = study.timed("detect_hot_keys") {
+      Skew.detectHotKeys(fact, "key", sampleFraction = 0.0001)
+    }
+    println(s"[skew] hot keys found=${hotKeys.sortBy(_.toString).mkString(",")}")
     run("hot_cold_split") { Skew.hotKeyJoin(fact, dim, "key", hotKeys) }
 
     // control: the same volume with NO hot key — the floor this join
@@ -127,6 +105,6 @@ object StressSkew {
       (col("id") % 1000L).cast("double").as("v"))
     run("uniform_control") { uniform.join(dim, "key") }
 
-    spark.stop()
+    study.stop()
   }
 }

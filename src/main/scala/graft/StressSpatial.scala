@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.SpatialJoin
+import graft.tools.Study
 
 /** Scale study for the grid-tile spatial join: arithmetic geometry on a
   * 100k×100k plane — `points` uniformly scattered points, `boxes` axis-
@@ -11,7 +12,7 @@ import graft.operators.SpatialJoin
   * plan for the raw BETWEEN predicate (BroadcastNestedLoopJoin) on a
   * small slice, because the full nested loop would be |P|·|B| compares.
   *
-  * Usage: runMain graft.StressSpatial [points] [boxes] [cpus]
+  * Usage: runMain graft.StressSpatial [points] [boxes]
   * Results recorded in SCALE.md.
   */
 object StressSpatial {
@@ -19,9 +20,8 @@ object StressSpatial {
   def main(args: Array[String]): Unit = {
     val nPoints = if (args.length > 0) args(0).toLong else 2000000L
     val nBoxes = if (args.length > 1) args(1).toLong else 100000L
-    val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = GraftSession.builder("graft-stress-spatial", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("spatial")
+    val spark = study.spark
 
     val side = 100000L
     def points(n: Long) = spark.range(n).select(
@@ -38,8 +38,8 @@ object StressSpatial {
         .cast("double").as("yhi"))
 
     def time[T](body: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = body
-      (r, (System.nanoTime() - t0) / 1e9)
+      val m = study.measure(body)
+      (m.value, m.seconds)
     }
 
     // warm the JIT/codegen once
@@ -63,6 +63,6 @@ object StressSpatial {
     println(f"[spatial] nested  (slice) ${pSlice}%,d pts x ${bSlice}%,d boxes" +
       f"  pairs=$nNaive%,d  ${tNaive}%6.2f s" +
       f"  (~${tNaive * 10000 / 60}%,.0f min extrapolated to full size)")
-    spark.stop()
+    study.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.tools.Study
 
 /** Spill-pressure study (round-6 verdict item 8): run the engine's
   * shuffle-heaviest shapes twice — once with default execution memory,
@@ -23,25 +24,10 @@ import org.apache.spark.sql.functions._
   *   3. sort-merge self-join on a non-broadcastable key
   *   4. MinHash signatures + LSH banding over documents
   *
-  * Usage: runMain graft.StressSpill <sfDir> [k] [cpus]
+  * Usage: runMain graft.StressSpill <sfDir> [k] [fraction]
   * Results recorded in SCALE.md §spill.
   */
 object StressSpill {
-
-  private final class SpillListener extends SparkListener {
-    @volatile var memSpilled = 0L
-    @volatile var diskSpilled = 0L
-    @volatile var peakExecMem = 0L
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        memSpilled += m.memoryBytesSpilled
-        diskSpilled += m.diskBytesSpilled
-        peakExecMem = math.max(peakExecMem, m.peakExecutionMemory)
-      }
-    }
-    def reset(): Unit = { memSpilled = 0L; diskSpilled = 0L; peakExecMem = 0L }
-  }
 
   /** Each workload returns a single order-independent checksum row so
     * the constrained-memory run is comparable value-for-value.
@@ -98,27 +84,17 @@ object StressSpill {
       }))
   }
 
-  private def run(sfDir: String, k: Int, cpus: Int, memFraction: Option[Double])
+  private def run(sfDir: String, k: Int, memFraction: Option[Double])
       : Seq[(String, String, Long, Long, Double)] = {
-    val b = GraftSession.builder(
-      s"graft-spill-${memFraction.getOrElse("default")}", cpus)
-    memFraction.foreach { f =>
-      b.config("spark.memory.fraction", f.toString)
-        .config("spark.memory.storageFraction", "0.1")
+    val study = Study(s"spill-${memFraction.getOrElse("default")}",
+      memFraction.toSeq.flatMap(f => Seq(
+        "spark.memory.fraction" -> f.toString,
+        "spark.memory.storageFraction" -> "0.1")): _*)
+    val out = workloads(study.spark, sfDir, k).map { case (name, body) =>
+      val m = study.measure(body())
+      (name, m.value, m.metrics.memorySpillBytes, m.metrics.diskSpillBytes, m.seconds)
     }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new SpillListener
-    spark.sparkContext.addSparkListener(listener)
-    val out = workloads(spark, sfDir, k).map { case (name, body) =>
-      listener.reset()
-      val t0 = System.nanoTime()
-      val chk = body()
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let trailing task-end listener events drain
-      (name, chk, listener.memSpilled, listener.diskSpilled, secs)
-    }
-    spark.stop()
+    study.stop()
     // a fresh session per configuration — SparkContext confs are fixed
     // at startup, so memory.fraction can't be toggled in place
     SparkSession.clearActiveSession()
@@ -129,11 +105,10 @@ object StressSpill {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val k = if (args.length > 1) args(1).toInt else 10
-    val cpus = if (args.length > 2) args(2).toInt else 16
-    val squeezeFraction = if (args.length > 3) args(3).toDouble else 0.12
+    val squeezeFraction = if (args.length > 2) args(2).toDouble else 0.12
 
-    val baseline = run(sfDir, k, cpus, None)
-    val squeezed = run(sfDir, k, cpus, Some(squeezeFraction))
+    val baseline = run(sfDir, k, None)
+    val squeezed = run(sfDir, k, Some(squeezeFraction))
 
     val pct = f"${squeezeFraction * 100}%.0f%%"
     println(f"[stress-spill] ${"workload"}%-26s ${"spill(base)"}%14s ${s"spill($pct)"}%14s ${"t base"}%8s ${s"t $pct"}%8s  match")

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.EventStreams
+import graft.tools.Study
 
 /** Throughput stress for the streaming operators: a rate source drives
   * the two stateful shapes that dominate real pipelines — session-window
@@ -21,7 +20,7 @@ import graft.streaming.EventStreams
   * does one node sustain, and what does the state store charge for it" —
   * the number that sizes a 1000-executor deployment.
   *
-  * Usage: runMain graft.StressStream [rowsPerSec] [seconds] [cpus]
+  * Usage: runMain graft.StressStream [rowsPerSec] [seconds]
   * Prints one line per scenario; results recorded in SCALE.md.
   */
 object StressStream {
@@ -29,11 +28,11 @@ object StressStream {
   def main(args: Array[String]): Unit = {
     val rowsPerSec = if (args.length > 0) args(0).toLong else 300000L
     val seconds = if (args.length > 1) args(1).toInt else 45
-    val cpus = if (args.length > 2) args(2).toInt else 16
     val nUsers = 100000L
 
-    val spark = GraftSession.builder("graft-stress-stream", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("stream")
+    val spark = study.spark
+    val cpus = study.cores
     import spark.implicits._
 
     val providers = Seq(
@@ -88,6 +87,6 @@ object StressStream {
         EventStreams.dedupedEventsStream(_, watermark = "10 seconds"))
     }
 
-    spark.stop()
+    study.stop()
   }
 }

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamingDedup
+import graft.tools.Study
 
 /** Throughput stress for [[StreamingDedup.nearDupPairs]] — dedup ON
   * INGEST: a rate source synthesizes documents with controlled near-dup
@@ -21,7 +20,7 @@ import graft.streaming.StreamingDedup
   * (bounded state — "dedup against the recent past", the shape an
   * unbounded 100 TB ingest actually ships).
   *
-  * Usage: runMain graft.StressStreamDedup [docsPerSec] [seconds] [cpus]
+  * Usage: runMain graft.StressStreamDedup [docsPerSec] [seconds]
   * Results recorded in SCALE.md.
   */
 object StressStreamDedup {
@@ -31,10 +30,10 @@ object StressStreamDedup {
     // unparameterized run reaches steady state inside the window
     val docsPerSec = if (args.length > 0) args(0).toLong else 5000L
     val seconds = if (args.length > 1) args(1).toInt else 45
-    val cpus = if (args.length > 2) args(2).toInt else 16
 
-    val spark = GraftSession.builder("graft-stress-sdedup", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("sdedup")
+    val spark = study.spark
+    val cpus = study.cores
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
@@ -88,6 +87,6 @@ object StressStreamDedup {
       s"16 hashes x 8 bands, local[$cpus], rocksdb")
     scenario("unbounded", None)
     scenario("ttl_60s", Some(java.time.Duration.ofSeconds(60)))
-    spark.stop()
+    study.stop()
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamingDedup
+import graft.tools.Study
 
 /** State-size scaling for streaming near-dup dedup (VERDICT r8 item 5:
   * the streaming family had rate-axis numbers but no state-axis 100×
@@ -27,7 +28,7 @@ import graft.streaming.StreamingDedup
   * collisions — the thing that could scale with state — are genuinely
   * exercised, not avoided.
   *
-  * Usage: runMain graft.StressStreamState [docsPerTrigger] [triggers] [cpus]
+  * Usage: runMain graft.StressStreamState [docsPerTrigger] [triggers] [minDeltasForSnapshot]
   * Results in SCALE.md §streaming-state.
   */
 object StressStreamState {
@@ -35,10 +36,10 @@ object StressStreamState {
   def main(args: Array[String]): Unit = {
     val docsPerTrigger = if (args.length > 0) args(0).toInt else 50000
     val triggers = if (args.length > 1) args(1).toInt else 100
-    val cpus = if (args.length > 2) args(2).toInt else 16
 
-    val spark = GraftSession.builder("graft-stress-sstate", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("sstate")
+    val spark = study.spark
+    val cpus = study.cores
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Changelog checkpointing: upload only the per-batch delta, not a
@@ -51,14 +52,14 @@ object StressStreamState {
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    // args(3): snapshot cadence (batches between full RocksDB snapshot
+    // args(2): snapshot cadence (batches between full RocksDB snapshot
     // constructions). The default (10) folds an O(state) snapshot into
     // every 10th trigger; raising it isolates the pure lookup/commit
     // cost — the A/B that attributes any rising trigger-time tail to
     // snapshot maintenance (tunable, async-able) vs per-lookup growth
     // (a scaling bug). See SCALE.md §streaming-state.
-    if (args.length > 3)
-      spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", args(3))
+    if (args.length > 2)
+      spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", args(2))
     import spark.implicits._
 
     // splitmix64 finalizer: content keys must not alias across 5M docs
@@ -112,6 +113,6 @@ object StressStreamState {
       f"last decade ${last}%.2f s, ratio ${last / first}%.2fx " +
       f"(state grew ${triggers}x trigger size)")
     q.stop()
-    spark.stop()
+    study.stop()
   }
 }

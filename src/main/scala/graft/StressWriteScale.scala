@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IncrementalAgg, Merge, TableStore}
+import graft.tools.Study
 
 /** Scale study for the WRITE/MERGE family (VERDICT r8 item 5): SCD1,
   * SCD2 and IVM refresh at 1× / 10× / 100× of sf0.1, so SCALE.md can
@@ -19,26 +20,21 @@ import graft.operators.{IncrementalAgg, Merge, TableStore}
   * number of key-wise joins whose cost is ~linear in the bigger side,
   * with the source side broadcastable at every k.
   *
-  * Usage: runMain graft.StressWriteScale <sfDir> <k> [cpus] [families]
+  * Usage: runMain graft.StressWriteScale <sfDir> <k> [families]
   *   families: csv subset of scd1,scd2,ivm (default all)
   */
 object StressWriteScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val k = args(1).toInt
-    val cpus = if (args.length > 2) args(2).toInt else 32
     val families: Set[String] =
-      if (args.length > 3) args(3).split(",").toSet
+      if (args.length > 2) args(2).split(",").toSet
       else Set("scd1", "scd2", "ivm", "aligned")
-    val spark = GraftSession.builder("graft-stress-writescale", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val study = Study("wscale")
+    val spark = study.spark
+    val cpus = study.cores
 
-    def timed[T](what: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[wscale] k=$k $what: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+    def timed[T](what: String)(f: => T): T = study.timed(s"k=$k $what")(f)
 
     val stride = 1000000000L
     // orders × k with replica-offset keys: same key density per replica,
@@ -167,6 +163,6 @@ object StressWriteScale {
       }
     }
 
-    spark.stop()
+    study.stop()
   }
 }

@@ -86,10 +86,8 @@ object IncrementalJoin {
     store.overwrite(viewTable,
       refreshFrame(store, viewTable, aTable, aFrom, aTo, bTable, bFrom, bTo, keys))
 
-  /** The refreshed view as an unexecuted frame — what [[refresh]] writes.
-    * Exposed for plan evidence (tools.IvmRefreshProbe) and tests.
-    */
-  private[graft] def refreshFrame(
+  /** The refreshed view as an unexecuted frame — what [[refresh]] writes. */
+  private def refreshFrame(
       store: TableStore,
       viewTable: String,
       aTable: String, aFrom: Int, aTo: Int,

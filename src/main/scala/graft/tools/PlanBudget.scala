@@ -1,15 +1,12 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Plan-cost measurement for the budget regression guard
   * (PlanBudgetSpec): runs one registry gate end-to-end and reports
   *
-  *   - `shuffles`: shuffle exchanges in the FINAL (post-AQE) physical
-  *     plan — every one is a full repartition of its input at scale;
+  *   - `shuffles`: shuffle exchanges in the executed plan after AQE —
+  *     every one is a full repartition of its input at scale;
   *   - `broadcasts`: broadcast exchanges (cheap but counted, so a
   *     broadcast→shuffle degradation and the reverse both show);
   *   - `jobs`: Spark jobs executed while building AND running the
@@ -18,9 +15,9 @@ import org.apache.spark.sql.SparkSession
   *     the final plan string. The round-6 graph_bfs regression added
   *     five such jobs while the final plan looked identical.
   *
-  * Jobs are counted via a job-group filter so concurrently running
-  * suites (sbt runs test suites in parallel in one JVM) can't pollute
-  * the count.
+  * Jobs are counted in the gate's own job group, so concurrently
+  * running suites (sbt runs test suites in parallel in one JVM) can't
+  * pollute the count.
   */
 object PlanBudget {
 
@@ -31,41 +28,15 @@ object PlanBudget {
   def measure(spark: SparkSession, sfDir: String, gate: String): Cost = {
     val fn = graft.SparkEntry.queries(gate)
     val group = s"planbudget-$gate-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) jobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, s"plan budget: $gate")
-    try {
+    val metrics = RunMetrics.of(spark.sparkContext)
+    val df = RunMetrics.inGroup(spark.sparkContext, group) {
       val df = fn(spark, sfDir)
       df.collect()
-      // listener delivery is async: poll until the count is stable
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 5000) {
-        Thread.sleep(50); waited += 50
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      val plan = df.queryExecution.executedPlan.toString
-      // every shuffle flavor counts — RoundRobinPartitioning is exactly
-      // the "someone added a .repartition(n)" regression this guard
-      // exists to catch (ReusedExchange prints without a partitioning
-      // clause, so it never inflates the count)
-      val shuffles =
-        "Exchange (hashpartitioning|rangepartitioning|SinglePartition|RoundRobinPartitioning)".r
-          .findAllIn(plan).size
-      val broadcasts = "BroadcastExchange".r.findAllIn(plan).size
-      Cost(shuffles, broadcasts, jobs.get())
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
+      df
     }
+    // the tree string carries both the final and the initial AQE plan
+    val c = PlanCounts(df.queryExecution.executedPlan.toString)
+    Cost(c.exchanges, c.broadcasts, metrics.group(group).jobs.toInt)
   }
 
   /** Print the measured cost for the given gates (or the committed
